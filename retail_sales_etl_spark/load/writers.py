@@ -6,6 +6,11 @@ into SQLite; the Spark-native equivalent of an idempotent full reload
 is ``mode("overwrite")`` into a parquet table directory — atomic at the
 table level, rerunnable, and massively parallel.
 
+Full reloads are write-audit-publish: the frame is written once into
+a staging directory next to the target, the staged files are audited,
+and only then are they swapped into place — a failed check never
+replaces a good table (``stage_table`` / ``publish_table``).
+
 Partitioned writes are first-class because at 100 TB the partition
 layout IS the read-path index: facts partitioned by a date-derived
 column get partition pruning for every time-bounded query.
@@ -13,10 +18,15 @@ column get partition pruning for every time-bounded query.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.modeling import check_primary_key
 
 
 def write_table(
@@ -72,35 +82,48 @@ def validate_loaded(
     """Post-load integrity validation (reference load.py:144).
 
     Re-reads the persisted table (validating what was actually written,
-    not the in-memory plan) and checks: row count reconciliation, PK
-    non-null, PK uniqueness — all in one distributed aggregate.
+    not the in-memory plan) and checks row count reconciliation, PK
+    non-null and PK uniqueness in one distributed aggregate
+    (``check_primary_key``). Returns ``{"row_count", "distinct_pk"}``.
     """
     df = spark.read.format(fmt).load(path)
+    return check_primary_key(
+        df, primary_key, expected_row_count, where=f"after LOAD for {path}"
+    )
 
-    null_cond = None
-    for pk in primary_key:
-        c = F.col(pk).isNull()
-        null_cond = c if null_cond is None else (null_cond | c)
 
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(null_cond, 1).otherwise(0)).alias("null_pk"),
-        F.count_distinct(*[F.col(pk) for pk in primary_key]).alias("distinct_pk"),
-    ).first()
+def stage_table(
+    df: DataFrame, path: str, partition_by: Sequence[str] | None = None
+) -> tuple[str, int]:
+    """WRITE step of write-audit-publish: write ``df`` once into a fresh
+    staging directory next to ``path`` (``<path>__stage_<hex>``).
 
-    if expected_row_count is not None and stats["n"] != expected_row_count:
-        raise ValueError(
-            f"Row count mismatch after LOAD for {path}: "
-            f"{expected_row_count} -> {stats['n']}"
+    Returns the staging directory and the row count observed on the
+    write job itself (no separate count job). A failed write leaves no
+    staging directory behind.
+    """
+    staged = f"{path}__stage_{uuid.uuid4().hex[:8]}"
+    written = Observation()
+    try:
+        write_table(
+            df.observe(written, F.count(F.lit(1)).alias("n")),
+            staged,
+            partition_by=partition_by,
         )
-    if stats["null_pk"] and stats["null_pk"] > 0:
-        raise ValueError(
-            f"NULL values found in primary key {list(primary_key)} after LOAD"
-        )
-    if stats["n"] and stats["distinct_pk"] != stats["n"]:
-        raise ValueError(f"Duplicate primary keys detected after LOAD for {path}")
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    # Read the observation only now: after a failed action it reports
+    # 0 rows instead of raising.
+    return staged, written.get["n"]
 
-    return {"row_count": stats["n"], "distinct_pk": stats["distinct_pk"]}
+
+def publish_table(staged: str, path: str) -> None:
+    """PUBLISH step of write-audit-publish: swap an audited staging
+    directory into ``path`` (rmtree then rename, as in compact_table)."""
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.rename(staged, path)
 
 
 def compact_table(
@@ -114,9 +137,6 @@ def compact_table(
     (no shuffle) into a temp dir, then swaps atomically-enough for a
     single-writer batch context.
     """
-    import shutil
-    import uuid
-
     df = spark.read.format(fmt).load(path)
     n_before = df.count()
     tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
@@ -151,10 +171,6 @@ def merge_upsert(
     compact_table). A lakehouse table format would add file-level
     pruning and ACID on top; the semantics here are identical.
     """
-    import os
-    import shutil
-    import uuid
-
     target = spark.read.format(fmt).load(path)
     n_target = target.count()
     n_updates = updates.count()
@@ -262,7 +278,20 @@ def run_load(
     primary_key: Sequence[str],
     partition_by: Sequence[str] | None = None,
 ) -> dict:
-    """Full Load phase: count -> write -> re-read -> validate."""
-    expected = df.count()
-    write_table(df, path, partition_by=partition_by)
-    return validate_loaded(spark, path, primary_key, expected_row_count=expected)
+    """Full Load phase as write-audit-publish.
+
+    Writes ``df`` once to a staging directory with its row count
+    observed on the write (``stage_table``), audits the staged files
+    against that count and for PK non-null / unique
+    (``validate_loaded``), then swaps them into ``path``
+    (``publish_table``). A failed write or audit deletes the staging
+    directory and leaves ``path`` as it was.
+    """
+    staged, n_written = stage_table(df, path, partition_by=partition_by)
+    try:
+        result = validate_loaded(spark, staged, primary_key, expected_row_count=n_written)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    publish_table(staged, path)
+    return result

@@ -144,17 +144,51 @@ def build_sales_fact(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def check_primary_key(
+    df: DataFrame,
+    primary_key: Sequence[str],
+    expected_row_count: int | None = None,
+    where: str = "during T2",
+) -> dict:
+    """PK non-null, PK unique and optional row-count reconciliation in
+    one distributed aggregate (only scalars come back to the driver).
+
+    ``where`` names the checkpoint in the error messages. Returns
+    ``{"row_count", "distinct_pk"}``.
+    """
+    null_cond = None
+    for pk in primary_key:
+        c = F.col(pk).isNull()
+        null_cond = c if null_cond is None else (null_cond | c)
+    stats = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(null_cond, 1).otherwise(0)).alias("null_pk"),
+        F.count_distinct(*[F.col(pk) for pk in primary_key]).alias("distinct_pk"),
+    ).first()
+
+    if stats["null_pk"]:
+        raise ValueError(
+            f"NULL values found in primary key {list(primary_key)} {where}"
+        )
+    if stats["distinct_pk"] != stats["n"]:
+        raise ValueError(f"Duplicate primary keys found on {list(primary_key)} {where}")
+    if expected_row_count is not None and stats["n"] != expected_row_count:
+        raise ValueError(
+            f"Row count changed {where}: {expected_row_count} -> {stats['n']}"
+        )
+    return {"row_count": stats["n"], "distinct_pk": stats["distinct_pk"]}
+
+
 def validate_integrity(
     df: DataFrame,
     primary_key: Sequence[str],
     expected_row_count: int | None = None,
     expected_columns: Sequence[str] | None = None,
-) -> None:
-    """T2 integrity gate (reference modeling.py:285): PK non-null, PK
-    unique, optional row-count reconciliation and schema contract.
-
-    One distributed pass computes all row-level checks (no collect of
-    data — only scalar aggregates come back to the driver).
+) -> dict:
+    """T2 integrity gate (reference modeling.py:285): schema and
+    snake_case contract (metadata only), then ``check_primary_key`` —
+    PK non-null, PK unique, optional row-count reconciliation — in one
+    distributed pass. Returns its ``{"row_count", "distinct_pk"}``.
     """
     import re as _re
 
@@ -167,22 +201,4 @@ def validate_integrity(
     for col in df.columns:
         if _re.fullmatch(r"[a-z0-9]+(?:_[a-z0-9]+)*", col) is None:
             raise ValueError(f"Invalid column name (not snake_case): {col}")
-
-    null_cond = None
-    for pk in primary_key:
-        c = F.col(pk).isNull()
-        null_cond = c if null_cond is None else (null_cond | c)
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(null_cond, 1).otherwise(0)).alias("null_pk"),
-        F.count_distinct(*[F.col(pk) for pk in primary_key]).alias("distinct_pk"),
-    ).first()
-
-    if stats["null_pk"] and stats["null_pk"] > 0:
-        raise ValueError(f"NULL values found in primary key {list(primary_key)}")
-    if stats["distinct_pk"] != stats["n"]:
-        raise ValueError(f"Duplicate primary keys found on {list(primary_key)}")
-    if expected_row_count is not None and stats["n"] != expected_row_count:
-        raise ValueError(
-            f"Row count changed during T2: {expected_row_count} -> {stats['n']}"
-        )
+    return check_primary_key(df, primary_key, expected_row_count)

@@ -7,18 +7,36 @@ counts into the control plane, the fact pipeline additionally builds
 and loads the date dimension (like the reference's sales pipeline),
 fail-fast with the failing stage recorded.
 
-Row counts are the only driver-side materialization per stage — each
-``df.count()`` is a cheap aggregate. The data plane never leaves Spark.
+Each pipeline's lineage runs once, as write-audit-publish:
+
+- EXTRACT's row count comes out of the fused ``sanity_check`` aggregate;
+- T1 stays lazy and carries a ``pyspark.sql.Observation`` row count;
+- T2 writes the modeled frame once into a staging directory next to the
+  target (``writers.stage_table``) — that job also fills the T1
+  observation — then audits the staged files with one aggregate (PK
+  non-null, PK unique, row count reconciled against T1) plus the schema
+  and snake_case contract (``modeling.validate_integrity``);
+- LOAD publishes the audited directory by swapping it into place.
+
+No stage runs a ``df.count()``. A failed check deletes the staging
+directory and leaves the previous target intact. Because T1's count is
+only known once the T2 write has run, the TRANSFORM_P1 row closes after
+TRANSFORM_P2 opened: stage rows can overlap in time. A failure in that
+shared job closes both rows FAILED (rows_out None) — an observation is
+never read after its action failed. Only scalars reach the driver; the
+data plane never leaves Spark.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import shutil
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .catalog import table_path
 from .control.runlog import ControlLog, new_run_id
@@ -153,40 +171,51 @@ def run_pipeline(
     tlog = get_logger(run_id, pipeline_name, os.path.join(control, "logs"))
     tlog.info("Pipeline started (sf_dir=%s warehouse=%s)", sf_dir, warehouse_dir)
     stage = None
+    pending = None  # TRANSFORM_P1, open until the T2 write observes its count
+    staged = None  # written-but-unpublished target, removed unless published
+    pk = spec.model_primary_key or spec.primary_key
+    target = os.path.join(warehouse_dir, spec.target_table)
     try:
         # EXTRACT
         stage = log.insert_stage(run_id, "EXTRACT", "STARTED", None)
-        sourced = readers.run_extract(
+        sourced, source_stats = readers.run_extract(
             spark,
             spec.source_table,
             table_path(sf_dir, spec.source_table),
             spec.expected_columns,
         )
-        n_sourced = sourced.count()
+        n_sourced = source_stats["row_count"]
         log.update_stage(stage, "SUCCESS", n_sourced, n_sourced, None)
         tlog.info("EXTRACT ok: %d rows", n_sourced)
 
-        # TRANSFORM CLEAN (T1)
+        # TRANSFORM CLEAN (T1) — lazy; counted by the T2 write
         stage = log.insert_stage(run_id, "TRANSFORM_P1", "STARTED", n_sourced)
+        cleaned_rows = Observation()
         cleaned = cleaning.run_cleaning(
             sourced,
             primary_key=spec.primary_key,
             defaults=spec.defaults,
             dedupe_order=spec.dedupe_order,
-        )
-        n_cleaned = cleaned.count()
-        log.update_stage(stage, "SUCCESS", n_sourced, n_cleaned, None)
-        tlog.info("TRANSFORM_P1 ok: %d -> %d rows", n_sourced, n_cleaned)
+        ).observe(cleaned_rows, F.count(F.lit(1)).alias("n"))
 
-        # TRANSFORM MODEL (T2)
-        stage = log.insert_stage(run_id, "TRANSFORM_P2", "STARTED", n_cleaned)
+        # TRANSFORM MODEL (T2): write once to staging, audit the files
+        pending = stage
+        stage = log.insert_stage(run_id, "TRANSFORM_P2", "STARTED", None)
         modeled = cleaned if spec.modeler is None else spec.modeler(spark, cleaned, sf_dir)
-        modeling.validate_integrity(
-            modeled,
-            spec.model_primary_key or spec.primary_key,
+        staged, _ = writers.stage_table(modeled, target, partition_by=spec.partition_by)
+        n_cleaned = cleaned_rows.get["n"]
+        log.update_stage(pending, "SUCCESS", n_sourced, n_cleaned, None)
+        pending = None
+        tlog.info("TRANSFORM_P1 ok: %d -> %d rows", n_sourced, n_cleaned)
+        # The staged files are read with the schema just written: the
+        # contract checks see the same columns, without a footer job.
+        audit = modeling.validate_integrity(
+            spark.read.schema(modeled.schema).parquet(staged),
+            pk,
             expected_row_count=n_cleaned,
         )
-        log.update_stage(stage, "SUCCESS", n_cleaned, n_cleaned, None)
+        n_modeled = audit["row_count"]
+        log.update_stage(stage, "SUCCESS", n_cleaned, n_modeled, None)
 
         # FACT PIPELINE EXTRA: date dimension (reference sales/date_dim)
         if pipeline_name == "lineitem":
@@ -210,23 +239,18 @@ def run_pipeline(
                 pipeline_name, "date_dim", load_order=1, table_role="dimension"
             )
 
-        # LOAD
+        # LOAD: publish the audited staging directory
         stage = log.insert_stage(run_id, "LOAD", "STARTED", n_cleaned)
-        result = writers.run_load(
-            spark,
-            modeled,
-            os.path.join(warehouse_dir, spec.target_table),
-            spec.model_primary_key or spec.primary_key,
-            partition_by=spec.partition_by,
-        )
-        log.update_stage(stage, "SUCCESS", n_cleaned, result["row_count"], None)
-        tlog.info("LOAD ok: %d rows -> %s", result["row_count"], spec.target_table)
+        writers.publish_table(staged, target)
+        staged = None
+        log.update_stage(stage, "SUCCESS", n_cleaned, n_modeled, None)
+        tlog.info("LOAD ok: %d rows -> %s", n_modeled, spec.target_table)
         if log.get_table(spec.target_table) is None:
             log.register_table(
                 spec.target_table,
                 spec.source_table,
                 grain="row" if spec.modeler else "source",
-                primary_key=spec.model_primary_key or spec.primary_key,
+                primary_key=pk,
             )
         # pipeline<->table ownership map (reference pipeline_table_map:
         # the fact lands after its same-run dimensions, load_order 2)
@@ -244,10 +268,14 @@ def run_pipeline(
         tlog.error(
             "Pipeline FAILED at %s: %s", stage["stage_name"] if stage else "?", err
         )
-        if stage is not None:
-            log.update_stage(stage, "FAILED", None, None, str(err))
+        for open_stage in (pending, stage):
+            if open_stage is not None:
+                log.update_stage(open_stage, "FAILED", None, None, str(err))
         log.update_run(run, "FAILED", str(err))
         raise
+    finally:
+        if staged is not None:
+            shutil.rmtree(staged, ignore_errors=True)
 
 
 def main() -> None:

@@ -6,8 +6,9 @@ distributed sanity checks -> raw-but-validated DataFrame.
 
 The reference reads whole CSVs into pandas and checks them in memory;
 here the read is a lazy distributed scan and every check is either
-metadata-only (schema) or a single aggregate job (null %, duplicate
-detection) — nothing proportional to data size ever reaches the driver.
+metadata-only (schema) or one aggregate query (row count, null %,
+duplicate detection) — nothing proportional to data size ever reaches
+the driver.
 """
 
 from __future__ import annotations
@@ -71,28 +72,34 @@ def sanity_check(
     - per-column NULL percentage below threshold
     - full-row duplicate detection (fail-fast, like the reference)
 
-    One aggregate job computes row count + all null counts; the
-    duplicate check is a second (hash-agg) job. Returns the stats dict
-    so callers can log it.
+    One aggregate query: group by every column (``groupBy`` treats
+    NULLs as equal and normalizes NaN/-0.0, the same semantics as
+    ``distinct()``), then fold the groups to row count, distinct-row
+    count and per-column NULL counts. Returns the stats dict so callers
+    can log it.
     """
-    aggs = [F.count(F.lit(1)).alias("__n")] + [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__null_{i}")
-        for i, c in enumerate(df.columns)
-    ]
-    row = df.agg(*aggs).first()
-    n = row["__n"]
+    cols = df.columns
+    groups = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__k"))
+    row = groups.agg(
+        F.sum("__k").alias("__n"),
+        F.count(F.lit(1)).alias("__distinct"),
+        *[
+            F.sum(F.when(F.col(c).isNull(), F.col("__k")).otherwise(0)).alias(
+                f"__null_{i}"
+            )
+            for i, c in enumerate(cols)
+        ],
+    ).first()
+    n = row["__n"] or 0
     if n == 0:
         raise ValueError("Source data is empty")
 
-    null_pct = {
-        c: 100.0 * (row[f"__null_{i}"] or 0) / n for i, c in enumerate(df.columns)
-    }
+    null_pct = {c: 100.0 * (row[f"__null_{i}"] or 0) / n for i, c in enumerate(cols)}
     for c, pct in null_pct.items():
         if pct > null_threshold_pct:
             raise ValueError(f"Column '{c}' has {pct:.2f}% NULL values")
 
-    n_distinct = df.distinct().count()
-    dup_count = n - n_distinct
+    dup_count = n - row["__distinct"]
     if dup_count > 0 and fail_on_duplicates:
         raise ValueError(f"Duplicate rows found in source data: {dup_count}")
 
@@ -106,9 +113,12 @@ def run_extract(
     expected_columns: Sequence[str],
     fmt: str = "parquet",
     schema: StructType | None = None,
-) -> DataFrame:
-    """Full Extract phase (reference extract.py:138): read + validate."""
+) -> tuple[DataFrame, dict]:
+    """Full Extract phase (reference extract.py:138): read + validate.
+
+    Returns the lazy source frame and the ``sanity_check`` stats, whose
+    ``row_count`` is the extracted row count — no separate count job.
+    """
     df = read_source(spark, path, fmt=fmt, schema=schema)
     validate_schema(df, expected_columns)
-    sanity_check(df)
-    return df
+    return df, sanity_check(df)

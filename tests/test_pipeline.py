@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from retail_sales_etl_spark.control.runlog import ControlLog
 from retail_sales_etl_spark.pipeline import run_pipeline
 
@@ -56,8 +58,6 @@ def test_pipeline_lifecycle_gating(spark, sf_dir, tmp_path):
     """Deactivated pipelines refuse to run; listing excludes them;
     reactivation restores both (reference metadata_table_helpers
     list_active_pipelines / deactivate_pipeline parity)."""
-    import pytest
-
     wh = str(tmp_path / "wh")
     control = os.path.join(wh, "_control")
     log = ControlLog(control)
@@ -174,3 +174,139 @@ def test_bootstrap_metadata_idempotent(tmp_path):
     assert [t["table_name"] for t in log.list_tables_for_pipeline("customer")] == [
         "customer_dim"
     ]
+
+
+def _stage_rows(log, run_id):
+    """(name, status, rows_in, rows_out) of every closing stage record,
+    after checking that no stage row was left STARTED."""
+    records = log.stages(run_id)
+    started = [r["stage_name"] for r in records if r["status"] == "STARTED"]
+    closed = [r for r in records if r["status"] != "STARTED"]
+    assert [r["stage_name"] for r in closed] == started, records
+    return [(r["stage_name"], r["status"], r["rows_in"], r["rows_out"]) for r in closed]
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _leftover_stages(wh):
+    return [d for d in os.listdir(wh) if "__stage_" in d]
+
+
+def test_pipeline_job_budget_and_stage_counts(spark, sf_dir, tmp_path):
+    """Each pipeline's lineage runs once: a warm run launches at most
+    half the Spark jobs of the count-per-check pipeline (customer 29,
+    supplier 29, part 23, lineitem 31), and the stage log reports the
+    same rows_in/rows_out as before, in stage order."""
+    if os.path.basename(sf_dir) != "sf0.001":
+        pytest.skip("golden counts are for the sf0.001 fixture")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    count_per_check_jobs = {"customer": 29, "supplier": 29, "part": 23, "lineitem": 31}
+    for name in count_per_check_jobs:  # warm the session's table cache
+        run_pipeline(spark, name, sf_dir, str(tmp_path / "warm"))
+
+    def same(n):
+        return [(s, "SUCCESS", n, n) for s in ("EXTRACT", "TRANSFORM_P1", "TRANSFORM_P2", "LOAD")]
+
+    golden = {
+        "customer": same(150),
+        "supplier": same(10),
+        "part": same(200),
+        "lineitem": [
+            ("EXTRACT", "SUCCESS", 6000, 6000),
+            ("TRANSFORM_P1", "SUCCESS", 6000, 5999),
+            ("TRANSFORM_P2", "SUCCESS", 5999, 5999),
+            ("LOAD_DATE_DIM", "SUCCESS", 2405, 2405),
+            ("LOAD", "SUCCESS", 5999, 5999),
+        ],
+    }
+    wh = str(tmp_path / "wh")
+    log = ControlLog(os.path.join(wh, "_control"))
+    for name, before in count_per_check_jobs.items():
+        j0 = int(sched.nextJobId())
+        run = run_pipeline(spark, name, sf_dir, wh)
+        jobs = int(sched.nextJobId()) - j0
+        assert 2 * jobs <= before, (name, jobs, before)
+        assert _stage_rows(log, run["run_id"]) == golden[name]
+    assert not _leftover_stages(wh)
+
+
+def test_t2_failure_keeps_previous_target(spark, sf_dir, tmp_path, monkeypatch):
+    """A NULL PK, a duplicate PK or a T1 -> T2 row-count change fails
+    the audit of the staged files: TRANSFORM_P2 is recorded FAILED,
+    nothing is loaded, and the previous customer_dim stays intact."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from retail_sales_etl_spark import pipeline
+
+    wh = str(tmp_path / "wh")
+    assert run_pipeline(spark, "customer", sf_dir, wh)["status"] == "SUCCESS"
+    target = os.path.join(wh, "customer_dim")
+    before = _rows(spark, target)
+    log = ControlLog(os.path.join(wh, "_control"))
+    spec = pipeline.PIPELINES["customer"]
+    cid = F.col("customer_id")
+    faults = {
+        "NULL values found": lambda d: d.withColumn(
+            "customer_id", F.when(cid == 1, None).otherwise(cid)
+        ),
+        "Duplicate primary keys": lambda d: d.withColumn("customer_id", cid % 7),
+        "Row count changed during T2": lambda d: d.filter(cid > 1),
+    }
+    for message, fault in faults.items():
+        monkeypatch.setitem(
+            pipeline.PIPELINES,
+            "customer",
+            replace(spec, modeler=lambda s, df, sf, f=fault: f(spec.modeler(s, df, sf))),
+        )
+        with pytest.raises(ValueError, match=message):
+            run_pipeline(spark, "customer", sf_dir, wh)
+        run = log.runs()[-1]
+        assert run["status"] == "FAILED"
+        assert [r[:2] for r in _stage_rows(log, run["run_id"])] == [
+            ("EXTRACT", "SUCCESS"),
+            ("TRANSFORM_P1", "SUCCESS"),
+            ("TRANSFORM_P2", "FAILED"),
+        ]
+        assert _rows(spark, target) == before
+        assert not _leftover_stages(wh)
+
+
+def test_failed_t2_write_records_no_observed_count(spark, sf_dir, tmp_path, monkeypatch):
+    """When the one job that runs T1 and T2 fails, the T1 observation
+    is never read (after a failed action it reports 0, not an error):
+    both transform rows close FAILED with rows_out None, none is left
+    STARTED, and the previous target survives."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from retail_sales_etl_spark import pipeline
+
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, "part", sf_dir, wh)
+    target = os.path.join(wh, "part_dim")
+    before = _rows(spark, target)
+    spec = pipeline.PIPELINES["part"]
+
+    def raising(s, df, sf):
+        return spec.modeler(s, df, sf).withColumn(
+            "part_name", F.raise_error(F.concat(F.lit("bad part "), F.col("part_name")))
+        )
+
+    monkeypatch.setitem(pipeline.PIPELINES, "part", replace(spec, modeler=raising))
+    with pytest.raises(Exception, match="bad part"):
+        run_pipeline(spark, "part", sf_dir, wh)
+    log = ControlLog(os.path.join(wh, "_control"))
+    run = log.runs()[-1]
+    assert run["status"] == "FAILED"
+    assert [(r[0], r[1], r[3]) for r in _stage_rows(log, run["run_id"])] == [
+        ("EXTRACT", "SUCCESS", 200),
+        ("TRANSFORM_P1", "FAILED", None),
+        ("TRANSFORM_P2", "FAILED", None),
+    ]
+    assert _rows(spark, target) == before
+    assert not _leftover_stages(wh)

@@ -1479,6 +1479,10 @@ def test_session_tails_probe_reads_file_pruned(spark, tmp_path, monkeypatch):
     from retail_sales_etl_spark.load import lakehouse as lh
     from retail_sales_etl_spark.streaming import events as streaming_events
 
+    # pin the prune path: the test state is metadata-scale, so the
+    # small-index shortcut would (correctly) skip the key collect.
+    # The env var is read at import time, so only the attribute counts.
+    monkeypatch.setattr(streaming_events, "_PROBE_SMALL_INDEX_ROWS", 0)
     tails = str(tmp_path / "tails")
     grid = str(tmp_path / "grid")
     users = spark.range(160).select(
@@ -1512,6 +1516,60 @@ def test_session_tails_probe_reads_file_pruned(spark, tmp_path, monkeypatch):
     probes = [o for o in opened if o[0] == "user_id"]
     assert probes, "prior-tail probe did not go through read_where_in"
     assert probes[0][1] <= 4 < len(live), (probes[0][1], len(live))
+
+
+def test_session_tails_small_index_reads_whole_pinned_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """Twin of the pruned-probe test: below the small-index threshold
+    the prior-tail read is ONE full read of the pinned snapshot, and
+    the batch's user keys are never collected to the driver."""
+    import sys
+
+    from pyspark.sql import functions as F
+
+    from retail_sales_etl_spark.load import lakehouse as lh
+    from retail_sales_etl_spark.streaming import events as streaming_events
+
+    monkeypatch.setattr(streaming_events, "_PROBE_SMALL_INDEX_ROWS", 100_000)
+    tails = str(tmp_path / "tails")
+    grid = str(tmp_path / "grid")
+    users = spark.range(40).select(
+        F.col("id").alias("user_id"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+    )
+    for b in range(2):
+        batch = users.filter((F.col("user_id") % 2) == b)
+        assert streaming_events.session_tails_sink(batch, b, tails, grid) is True
+
+    full_reads, pruned_reads, collects = [], [], []
+    orig_read = lh.LakehouseTable.read
+    orig_where_in = lh.LakehouseTable.read_where_in
+    orig_collect = streaming_events._probe_keys_or_warn
+
+    def read_spy(self, version=None):
+        if sys._getframe(1).f_code.co_name == "session_tails_sink":
+            full_reads.append((self.path, version))
+        return orig_read(self, version=version)
+
+    def where_in_spy(self, column, values, version=None):
+        pruned_reads.append(column)
+        return orig_where_in(self, column, values, version=version)
+
+    def collect_spy(*args, **kwargs):
+        collects.append(args[1:])
+        return orig_collect(*args, **kwargs)
+
+    monkeypatch.setattr(lh.LakehouseTable, "read", read_spy)
+    monkeypatch.setattr(lh.LakehouseTable, "read_where_in", where_in_spy)
+    monkeypatch.setattr(streaming_events, "_probe_keys_or_warn", collect_spy)
+    pinned = lh.LakehouseTable(spark, tails).latest_version()
+    nxt = spark.createDataFrame(
+        [(3, 10_000), (1000, 10_001)], "user_id bigint, s bigint"
+    ).select("user_id", F.timestamp_seconds(F.col("s")).alias("ts"))
+    assert streaming_events.session_tails_sink(nxt, 2, tails, grid) is True
+    assert full_reads == [(tails, pinned)]
+    assert pruned_reads == [] and collects == []
 
 
 def test_jpeg_exif_pipeline_is_shuffle_free_and_column_pruned(spark, sf_dir):

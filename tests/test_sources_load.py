@@ -13,13 +13,14 @@ from retail_sales_etl_spark.sources import readers
 
 
 def test_read_parquet_with_validation(spark, sf_dir):
-    df = readers.run_extract(
+    df, stats = readers.run_extract(
         spark,
         "region",
         table_path(sf_dir, "region"),
         ["r_regionkey", "r_name"],
     )
     assert df.count() == 5
+    assert stats["row_count"] == 5 and stats["duplicate_rows"] == 0
 
 
 def test_schema_mismatch_raises(spark, sf_dir):
@@ -65,6 +66,34 @@ def test_sanity_check_duplicates(spark):
     stats = readers.sanity_check(df, fail_on_duplicates=False)
     assert stats["duplicate_rows"] == 1
 
+    # Duplicate rows holding NULL and NaN: the grouped check must count
+    # them exactly as distinct() does (NULL equals NULL, NaN equals
+    # NaN, -0.0 equals 0.0), and count NULLs per column, not per group.
+    nan = float("nan")
+    rows = [
+        (1, "a", 1.0), (1, "a", 1.0),
+        (None, "b", nan), (None, "b", nan),
+        (2, None, nan), (2, None, nan), (2, None, nan),
+        (3, None, 0.0), (3, None, -0.0),
+        (4, None, None), (4, None, None),
+        (5, "c", 2.0),
+    ]
+    df = spark.createDataFrame(rows, "id INT, v STRING, x DOUBLE")
+    with pytest.raises(ValueError, match="Duplicate rows found in source data: 6"):
+        readers.sanity_check(df)
+    stats = readers.sanity_check(df, fail_on_duplicates=False)
+    assert stats == {
+        "row_count": 12,
+        "null_pct": {"id": 100.0 * 2 / 12, "v": 100.0 * 7 / 12, "x": 100.0 * 2 / 12},
+        "duplicate_rows": 6,
+    }
+
+    with pytest.raises(ValueError, match="^Source data is empty$"):
+        readers.sanity_check(spark.createDataFrame([], "id INT, v STRING"))
+    nulls = spark.createDataFrame([(1, None), (2, None)], "id INT, v STRING")
+    with pytest.raises(ValueError, match=r"^Column 'v' has 100\.00% NULL values$"):
+        readers.sanity_check(nulls, null_threshold_pct=50.0)
+
 
 def test_load_roundtrip_and_validation(spark, sf_dir, tmp_path):
     region = load_table(spark, sf_dir, "region")
@@ -74,6 +103,22 @@ def test_load_roundtrip_and_validation(spark, sf_dir, tmp_path):
     # idempotent: rerun overwrites, same result
     result2 = writers.run_load(spark, region, path, ["r_regionkey"])
     assert result2["row_count"] == 5
+
+
+def test_run_load_failed_audit_keeps_target(spark, tmp_path):
+    """Write-audit-publish: a duplicate-PK frame fails the audit of its
+    staged files, so the good table already at the target survives and
+    no staging directory is left behind."""
+    path = str(tmp_path / "dim")
+    good = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
+    assert writers.run_load(spark, good, path, ["id"])["row_count"] == 2
+
+    dup = spark.createDataFrame([(1, "x"), (1, "y"), (3, "z")], ["id", "v"])
+    with pytest.raises(ValueError, match="Duplicate primary keys"):
+        writers.run_load(spark, dup, path, ["id"])
+    back = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert back == [(1, "a"), (2, "b")]
+    assert not [d for d in os.listdir(tmp_path) if "__stage_" in d]
 
 
 def test_partitioned_write(spark, sf_dir, tmp_path):
